@@ -281,7 +281,7 @@ def ivf_topk(
 # shuffle-free narrow projection; above it, the broadcast-join argmin
 # runs (a literal plan with 65536 IVF lists x 768 dims would be a
 # 50M-constant codegen blowup — the join IS the right plan there).
-# Same cost-routing discipline as cluster.py's 100k-edge LPA gate.
+# Same cost-routing discipline as plans/optimize.driver_rows.
 _LIT_ASSIGN_MAX_VALUES = 32_768
 
 

@@ -11,44 +11,43 @@ The reference deduplicates nothing (every upload re-embeds everything,
 ``/root/reference/app.py:145-157``); this operator is the [EXT]
 scale-path completion of V8 in SURVEY.md §2.C.
 
-Implementation: cost-routed. Small candidate graphs (the common case —
-LSH pairs are a sliver of the corpus) collapse to a driver-side
-union-find in one bounded ``take()``; large graphs run iterative
-hash-min label propagation on DataFrames —
-``label(v) ← min(label(v), min over neighbours u of label(u))`` until a
-fixpoint. Each round is one shuffle join + one hash aggregate, both on
-the node id, and converges in O(graph diameter) rounds. Near-dup
-graphs are dense blobs with tiny diameters (duplicates of the same
-underlying document), so 3-5 rounds is typical; ``max_iter`` bounds
-pathological chains. For adversarial long-chain graphs at extreme
-scale, the two-phase large-star/small-star variant (Kiveris et al.,
-"Connected Components in MapReduce and Beyond") halves the round count;
-the per-round dataflow below is identical, so it is a drop-in upgrade.
+Implementation: cost-routed through ``plans/optimize.driver_rows``.
+Small candidate graphs (the common case — LSH pairs are a sliver of
+the corpus) collapse to a driver-side union-find in one bounded
+``take()``; graphs above ``optimize.DRIVER_ROWS`` edges fall back to
+``connected_components_star``, large-star/small-star alternation on
+DataFrames (Kiveris et al., "Connected Components in MapReduce and
+Beyond"). Star contracts every component toward a star in O(log² n)
+rounds whatever the graph diameter, so long chains of borderline
+matches do not stall it; ``max_iter`` bounds the rounds and a warning
+marks an exit on the cap.
 
 Scale notes:
 - ``localCheckpoint(eager=True)`` after every round truncates lineage —
   without it the plan doubles per iteration and Catalyst analysis time
   explodes long before data size matters.
-- The edge list is persisted once and reused every round (it is the
-  join probe side each time).
-- The convergence check is a single ``limit(1).count()`` over the
-  changed-label rows — it short-circuits, no full materialization.
+- The symmetrized edge list is checkpointed once; every round works
+  on the previous round's checkpointed edge frame.
+- The convergence check is one scalar agg per round (edge count plus
+  an order-independent edge hash), no full materialization.
 """
 
 from __future__ import annotations
 
 import warnings
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from resume_jd_matcher_spark.plans.optimize import driver_rows
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "left_id",
     dst: str = "right_id",
-    max_iter: int = 20,
-    local_threshold: int = 100_000,
+    max_iter: int = 30,
 ) -> DataFrame:
     """Resolve an undirected edge list into components.
 
@@ -56,35 +55,31 @@ def connected_components(
     ``cluster_rep`` is the minimum node id reachable from ``node`` —
     the deterministic canonical representative.
 
-    Cost-based routing (same philosophy as
-    ``plans/optimize.choose_similarity_strategy``): the edge list after
-    LSH candidate generation is usually a small fraction of the corpus
-    — when it fits comfortably on the driver (≤ ``local_threshold``
-    edges), a driver-side union-find resolves it in one pass instead
-    of O(diameter) distributed rounds, each of which costs a shuffle
-    join + checkpoint. Above the threshold the distributed hash-min
-    loop runs; both paths produce identical labels. Routing uses a
-    bounded ``take()`` that doubles as the fetch, so the small path
-    materializes the edge list exactly once.
-
-    The 100k default is sized to the real driver cost: take() yields
-    Python Row objects (~100+ bytes each, not 16 raw bytes of two
-    longs) and union-find builds dicts over both endpoints — ~100 MB
-    of driver heap at the threshold. Raise it only with driver memory
-    to spare.
+    Cost-based routing through ``plans/optimize.driver_rows``: the
+    edge list after LSH candidate generation is usually a small
+    fraction of the corpus — when it fits the driver, a union-find
+    resolves it in one pass over the bounded ``take()`` that sized it,
+    instead of distributed rounds that each cost a shuffle join +
+    checkpoint. Above ``optimize.DRIVER_ROWS`` edges,
+    ``connected_components_star`` runs with ``max_iter``; both paths
+    produce identical labels.
     """
-    # take() both sizes AND fetches in one materialization: at most
-    # threshold+1 Row objects transit the driver.
-    probe = edges.select(src, dst).take(local_threshold + 1)
-    if len(probe) <= local_threshold:
-        return _cc_local_df(edges.sparkSession, [(r[0], r[1]) for r in probe])
-    return _cc_distributed(edges, src, dst, max_iter)
+    labels = _cc_driver(edges, src, dst)
+    if labels is None:
+        return connected_components_star(edges, src, dst, max_iter)
+    return edges.sparkSession.createDataFrame(
+        list(labels.items()), "node: bigint, cluster_rep: bigint"
+    )
 
 
-def _cc_local_df(spark, pairs) -> DataFrame:
-    parent = _union_find(pairs)
-    rows = [(n, _uf_find(parent, n)) for n in parent]
-    return spark.createDataFrame(rows, "node: bigint, cluster_rep: bigint")
+def _cc_driver(edges: DataFrame, src: str, dst: str) -> dict | None:
+    """``{node: component min}`` by driver-side union-find, or None
+    when the edge list is over ``optimize.DRIVER_ROWS`` rows."""
+    rows = driver_rows(edges.select(src, dst))
+    if rows is None:
+        return None
+    parent = _union_find(rows)
+    return {n: _uf_find(parent, n) for n in parent}
 
 
 def _uf_find(parent: dict, x):
@@ -98,7 +93,7 @@ def _uf_find(parent: dict, x):
 
 def _union_find(pairs) -> dict:
     """Driver-side union-find over an edge list (small-graph fast
-    path; bounded by ``local_threshold`` rows of two longs)."""
+    path; bounded by ``optimize.DRIVER_ROWS`` rows of two longs)."""
     parent: dict = {}
 
     for a, b in pairs:
@@ -113,85 +108,11 @@ def _union_find(pairs) -> dict:
     return parent
 
 
-def _cc_distributed(
-    edges: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
-    # symmetrize via ONE explode, not union(edges, swap(edges)) — the
-    # union evaluates the (possibly expensive) upstream candidate-pair
-    # subplan twice (same fix as connected_components_star, r12)
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-                )
-            ).alias("_e")
-        )
-        .select(F.col("_e.a").alias("a"), F.col("_e.b").alias("b"))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    try:
-        for _ in range(max_iter):
-            nbr_min = (
-                sym.join(
-                    labels.select(
-                        F.col("node").alias("b"), F.col("label").alias("nbr_label")
-                    ),
-                    "b",
-                )
-                .groupBy("a")
-                .agg(F.min("nbr_label").alias("nbr_label"))
-            )
-            nxt = (
-                labels.join(nbr_min, labels["node"] == nbr_min["a"], "left")
-                .select(
-                    "node",
-                    F.col("label").alias("old_label"),
-                    F.least(
-                        F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                    ).alias("label"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                nxt.filter(F.col("label") != F.col("old_label")).limit(1).count()
-            )
-            labels = nxt.select("node", "label")
-            if changed == 0:
-                converged = True
-                break
-    finally:
-        sym.unpersist()
-    if not converged:
-        # A graph with diameter > max_iter exits here with labels that
-        # are NOT transitive (two nodes of one component can still
-        # carry different reps). Near-dup blobs converge in a handful
-        # of rounds, so this signals a pathological chain — surface it
-        # instead of returning silently-wrong clusters.
-        warnings.warn(
-            f"connected_components: hash-min did not converge within "
-            f"max_iter={max_iter} rounds; labels may be non-transitive. "
-            "Raise max_iter or switch to the large-star/small-star variant.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select("node", F.col("label").alias("cluster_rep"))
-
-
 def dedup_clusters(
     candidates: DataFrame,
     src: str = "left_id",
     dst: str = "right_id",
-    max_iter: int = 20,
+    max_iter: int = 30,
 ) -> DataFrame:
     """Candidate pairs → per-document cluster assignment with sizes.
 
@@ -199,22 +120,20 @@ def dedup_clusters(
     that appears in at least one candidate pair. Downstream keep/drop
     policy is then a trivial filter (``doc_id = cluster_rep`` keeps one
     representative per near-dup cluster).
-    """
-    probe = candidates.select(src, dst).take(100_001)
-    if len(probe) <= 100_000:
-        # Small-graph fast path end to end: ONE materialization of the
-        # candidate pairs; labels AND sizes resolve driver-side, zero
-        # extra shuffles.
-        from collections import Counter
 
-        parent = _union_find([(r[0], r[1]) for r in probe])
-        labels = {n: _uf_find(parent, n) for n in parent}
+    Routed like ``connected_components``. On the driver path labels AND
+    sizes resolve driver-side off ONE materialization of the candidate
+    pairs, zero extra shuffles; above ``optimize.DRIVER_ROWS`` edges
+    the star labels are sized with one hash agg.
+    """
+    labels = _cc_driver(candidates, src, dst)
+    if labels is not None:
         sizes = Counter(labels.values())
         return candidates.sparkSession.createDataFrame(
             [(n, rep, sizes[rep]) for n, rep in labels.items()],
             "doc_id: bigint, cluster_rep: bigint, cluster_size: bigint",
         )
-    comp = _cc_distributed(candidates, src, dst, max_iter)
+    comp = connected_components_star(candidates, src, dst, max_iter)
     sizes = comp.groupBy("cluster_rep").agg(F.count("*").alias("cluster_size"))
     return (
         comp.join(sizes, "cluster_rep")
@@ -258,7 +177,7 @@ def pagerank(
     # Materialize the edge list ONCE: it feeds deg + every iteration
     # (n_iter+1 consumers), and upstream edge derivations (e.g. the
     # full MinHash pipeline) must not re-run per round — same
-    # checkpoint discipline as the label-propagation loop above.
+    # checkpoint discipline as connected_components_star.
     edges = edges.localCheckpoint()
     n = nodes.count()  # bounded scalar: the node count
     base = (1.0 - damping) / n
@@ -372,11 +291,12 @@ def connected_components_star(
     max_iter: int = 30,
 ) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond") — the
-    diameter-robust alternative the hash-min loop's non-convergence
-    warning points at: alternating rounds contract the graph toward
-    per-component stars in O(log² n) rounds REGARDLESS of diameter,
-    where hash-min needs O(diameter) rounds and dies on long chains.
+    "Connected Components in MapReduce and Beyond") — the distributed
+    path of ``connected_components`` and ``dedup_clusters`` above
+    ``optimize.DRIVER_ROWS`` edges: alternating rounds contract the
+    graph toward per-component stars in O(log² n) rounds REGARDLESS of
+    diameter, where hash-min label propagation would need O(diameter)
+    rounds and stall on long chains.
 
     Both phases are pure agg+join dataflow (no neighborhood
     collect_list, so a hub node never materializes its adjacency in
@@ -391,7 +311,8 @@ def connected_components_star(
     Convergence = the edge multiset's order-independent hash sum is
     stable across a round (one scalar agg per round); the final star
     edges give each node its component minimum directly. Output:
-    (node, cluster_rep), identical labels to ``connected_components``.
+    (node, cluster_rep), identical labels to the driver-side
+    union-find — a node whose only edge is a self-loop labels itself.
     """
     # symmetrize via ONE explode, not union(edges, swap(edges)) — the
     # union spelling evaluates the (possibly expensive) upstream edge
@@ -407,12 +328,13 @@ def connected_components_star(
             ).alias("_e")
         )
         .select(F.col("_e.a").alias("a"), F.col("_e.b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
     # consumed once, at the very end, off the sym checkpoint — no
-    # eager materialization job of its own
+    # eager materialization job of its own. Read BEFORE the self-loop
+    # filter below, so a node whose only edge is (v, v) keeps its
+    # (v, v) label.
     all_nodes = sym.select(F.col("a").alias("node")).distinct()
 
     def edge_checksum(e: DataFrame) -> int:
@@ -425,7 +347,8 @@ def connected_components_star(
 
     # work on canonical undirected edges (lo < hi)
     cur = (
-        sym.select(
+        sym.filter(F.col("a") != F.col("b"))
+        .select(
             F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
         )
         .distinct()
@@ -485,8 +408,8 @@ def connected_components_star(
     if not converged:
         # The hi->lo member mapping below is only a valid labeling at
         # the star fixpoint — exiting via the range bound means the
-        # labels may be WRONG, not just approximate. Mirror the
-        # hash-min sibling's non-convergence warning.
+        # labels may be WRONG, not just approximate; surface it instead
+        # of returning silently-wrong clusters.
         warnings.warn(
             f"connected_components_star did not reach the star fixpoint "
             f"in max_iter={max_iter} rounds; labels may be incorrect — "
@@ -578,7 +501,6 @@ def k_core(
     n_rounds: int = 6,
     left: str = "left_id",
     right: str = "right_id",
-    local_threshold: int = 100_000,
 ) -> DataFrame:
     """Fixed-round k-core peel of an undirected (left < right) edge
     graph: repeatedly drop nodes with degree < k and the edges
@@ -598,28 +520,24 @@ def k_core(
 
     Output: (node, core_deg) for nodes surviving ``n_rounds`` peels.
 
-    Cost-based routing (r13 — the ``connected_components`` /
-    100k-edge LPA discipline): a near-dup candidate graph is usually
-    a small fraction of the corpus, and each distributed peel round
-    costs a checkpointed shuffle + two semi-joins of pure latency.
-    When the deduped edge list fits on the driver (bounded take, ≤
-    ``local_threshold`` edges — same sizing rationale as
-    ``connected_components``) the identical fixed-round peel runs in
-    one Python pass — exact integer degree counts, same edge-drop
-    rule, same final filter, so the trajectory and output are
-    bit-identical to the distributed loop. Above the threshold the
-    per-round loop runs unchanged.
+    Cost-based routing through ``plans/optimize.driver_rows``: a
+    near-dup candidate graph is usually a small fraction of the
+    corpus, and each distributed peel round costs a checkpointed
+    shuffle + two semi-joins of pure latency. When the deduped edge
+    list fits on the driver the identical fixed-round peel runs in one
+    Python pass — exact integer degree counts, same edge-drop rule,
+    same final filter, so the trajectory and output are bit-identical
+    to the distributed loop. Above ``optimize.DRIVER_ROWS`` edges the
+    per-round loop runs.
     """
     dedup_e = (
         pairs.select(F.col(left).alias("a"), F.col(right).alias("b"))
         .filter(F.col("a") < F.col("b"))
         .distinct()
     )
-    probe = dedup_e.take(local_threshold + 1)
-    if len(probe) <= local_threshold:
-        return _k_core_local_df(
-            pairs.sparkSession, [(r[0], r[1]) for r in probe], k, n_rounds
-        )
+    rows = driver_rows(dedup_e)
+    if rows is not None:
+        return _k_core_local_df(pairs.sparkSession, rows, k, n_rounds)
     e = dedup_e.localCheckpoint()
     for _ in range(n_rounds):
         deg = (
@@ -645,8 +563,6 @@ def k_core(
 def _k_core_local_df(spark, edges, k: int, n_rounds: int) -> DataFrame:
     """Driver-side twin of the distributed peel: identical fixed-round
     trajectory over a (bounded) deduped edge list."""
-    from collections import Counter
-
     es = list(edges)
     for _ in range(n_rounds):
         deg = Counter()
@@ -668,7 +584,6 @@ def label_propagation_sync(
     n_iter: int = 4,
     src: str = "a",
     dst: str = "b",
-    local_threshold: int = 100_000,
 ) -> DataFrame:
     """Synchronous label-propagation communities (Raghavan et al.
     2007) over a SYMMETRIZED edge list: every node starts as its own
@@ -679,19 +594,17 @@ def label_propagation_sync(
     synchronized rounds, fully integer — the trajectory is exactly
     replayable (no RNG, no rounding, no convergence test).
 
-    Cost-based routing, same philosophy as ``connected_components``:
-    a bounded ``take()`` doubles as the fetch — at or below
-    ``local_threshold`` edges the trajectory runs driver-side in one
-    pass (each distributed round costs two shuffles, which at small
-    edge counts is pure stage latency); above it, the DataFrame loop
-    runs with the identical vote/tie semantics. Output: one row per
-    node ``(node, community)``.
+    Cost-based routing through ``plans/optimize.driver_rows``, like
+    ``connected_components``: while the edge list fits the driver the
+    trajectory runs there in one pass (each distributed round costs
+    two shuffles, which at small edge counts is pure stage latency);
+    above ``optimize.DRIVER_ROWS`` edges the DataFrame loop runs with
+    the identical vote/tie semantics. Output: one row per node
+    ``(node, community)``.
     """
-    probe = edges.select(src, dst).take(local_threshold + 1)
-    if len(probe) <= local_threshold:
-        return _lpa_local_df(
-            edges.sparkSession, [(r[0], r[1]) for r in probe], n_iter
-        )
+    rows = driver_rows(edges.select(src, dst))
+    if rows is not None:
+        return _lpa_local_df(edges.sparkSession, rows, n_iter)
     return _lpa_distributed(edges, n_iter, src, dst)
 
 

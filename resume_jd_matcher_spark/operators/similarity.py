@@ -144,12 +144,11 @@ def similarity_join_auto(
     left_vec: str = "left_embedding",
     right_vec: str = "right_embedding",
     dedup_pairs: bool = False,
-    max_exact_pairs: int = 50_000_000,
 ) -> DataFrame:
     """V6 with cost-based routing (SURVEY.md §4): pick the physical
     strategy from Catalyst's row-count estimates — no job runs to
     decide. Tractable estimated pair count → exact BLAS brute force
-    (``similarity_join_blas``); beyond ``max_exact_pairs`` → the
+    (``similarity_join_blas``); beyond ``optimize.MAX_EXACT_PAIRS`` → the
     LSH-bucketed candidates path (``ann.lsh_similarity_join``), whose
     equi-join works big×big without materializing either side.
 
@@ -162,7 +161,7 @@ def similarity_join_auto(
         choose_similarity_strategy,
     )
 
-    route = choose_similarity_strategy(left, right, max_exact_pairs)
+    route = choose_similarity_strategy(left, right)
     if route == "exact":
         return similarity_join_blas(
             left, right, threshold, left_id, right_id, left_vec, right_vec,

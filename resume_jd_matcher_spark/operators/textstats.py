@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from resume_jd_matcher_spark.functions.text import fingerprint_md5, tokens
+from resume_jd_matcher_spark.plans.optimize import driver_rows
 
 # Tiny per-language stopword lists for the n-gram/keyword heuristic.
 # Ordered dict — evaluation order is the deterministic tie-break.
@@ -742,7 +743,6 @@ def bpe_learn_merges(
     df: DataFrame,
     n_merges: int = 6,
     text_col: str = "text",
-    local_threshold: int = 100_000,
 ) -> DataFrame:
     """Byte-pair-encoding vocabulary learning (Sennrich et al. 2016),
     the tokenizer-training step, as a distributed DataFrame program:
@@ -771,16 +771,16 @@ def bpe_learn_merges(
     pytest). Every ~8 merges the vocab is ``localCheckpoint``-ed so
     lineage (one withColumn+replace per merge) stays bounded.
 
-    Cost-based routing (r13 — the connected_components / k_core
-    discipline): BPE's loop state is the WORD-TYPE vocabulary, which
-    is sub-linear in corpus size; when it fits on the driver (bounded
-    take, ≤ ``local_threshold`` types) the identical merge loop runs
-    in one Python pass — same delimiter encoding, same
-    leftmost-non-overlapping replace (str.replace), same exact
-    integer pair counts and (count desc, a, b) argmax — instead of
-    ``n_merges`` sequential argmax jobs. Above the threshold the
-    distributed loop runs unchanged; both routes produce identical
-    merge rows (pinned by a pytest).
+    Cost-based routing through ``plans/optimize.driver_rows`` (the
+    connected_components / k_core rule): BPE's loop state is the
+    WORD-TYPE vocabulary, which is sub-linear in corpus size; when it
+    fits on the driver the identical merge loop runs in one Python
+    pass — same delimiter encoding, same leftmost-non-overlapping
+    replace (str.replace), same exact integer pair counts and
+    (count desc, a, b) argmax — instead of ``n_merges`` sequential
+    argmax jobs. Above ``optimize.DRIVER_ROWS`` word types the
+    distributed loop runs; both routes produce identical merge rows
+    (pinned by a pytest).
     """
     vocab = (
         df.select(F.explode(tokens(text_col)).alias("w"))
@@ -788,17 +788,14 @@ def bpe_learn_merges(
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
     )
-    if local_threshold:
-        probe = vocab.take(local_threshold + 1)
-        if len(probe) <= local_threshold:
-            merges, _ = _bpe_local_loop(
-                [(r["w"], r["cnt"]) for r in probe], n_merges
-            )
-            return df.sparkSession.createDataFrame(
-                merges,
-                "step INT, left_sym STRING, right_sym STRING, "
-                "merged STRING, pair_count BIGINT",
-            )
+    rows = driver_rows(vocab)
+    if rows is not None:
+        merges, _ = _bpe_local_loop(rows, n_merges)
+        return df.sparkSession.createDataFrame(
+            merges,
+            "step INT, left_sym STRING, right_sym STRING, "
+            "merged STRING, pair_count BIGINT",
+        )
     vocab = vocab.withColumn(
         "sym", F.regexp_replace("w", "(.)", "·$1·")
     ).persist()
@@ -861,7 +858,6 @@ def bpe_encode_stats(
     n_merges: int = 6,
     id_col: str = "doc_id",
     text_col: str = "text",
-    local_threshold: int = 100_000,
 ) -> DataFrame:
     """Apply learned BPE merges and measure tokenizer fertility per
     document — the encode half of the tokenizer loop, done the way
@@ -877,48 +873,46 @@ def bpe_encode_stats(
     compression/fertility stat that decides whether a vocab is big
     enough.
 
-    Same r13 cost routing as ``bpe_learn_merges``: when the word-type
-    vocabulary fits the driver, the merge trajectory replays locally
-    and only the word→symbol-count LOOKUP returns to the cluster (a
-    broadcast-sized createDataFrame) — the corpus word stream and the
-    per-document aggregate stay distributed on both routes."""
+    Same ``plans/optimize.driver_rows`` routing as
+    ``bpe_learn_merges``: when the word-type vocabulary fits the
+    driver, the merge trajectory replays locally and only the
+    word→symbol-count LOOKUP returns to the cluster (a broadcast-sized
+    createDataFrame) — the corpus word stream and the per-document
+    aggregate stay distributed on both routes."""
     vocab0 = (
         df.select(F.explode(tokens(text_col)).alias("w"))
         .filter(F.col("w").rlike("^[a-z0-9]+$"))
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
     )
-    if local_threshold:
-        probe = vocab0.take(local_threshold + 1)
-        if len(probe) <= local_threshold:
-            _, syms = _bpe_local_loop(
-                [(r["w"], r["cnt"]) for r in probe], n_merges
+    rows = driver_rows(vocab0)
+    if rows is not None:
+        _, syms = _bpe_local_loop(rows, n_merges)
+        lkp_rows = [
+            (w, len(sym.strip("·").split("··"))) for w, sym in syms.items()
+        ]
+        lookup = df.sparkSession.createDataFrame(
+            lkp_rows, "w STRING, n_sym INT"
+        )
+        words = df.select(
+            F.col(id_col), F.explode(tokens(text_col)).alias("w")
+        ).filter(F.col("w").rlike("^[a-z0-9]+$"))
+        return (
+            words.join(F.broadcast(lookup), "w")
+            .groupBy(id_col)
+            .agg(
+                F.count("*").alias("n_words"),
+                F.sum("n_sym").alias("n_symbols"),
             )
-            lkp_rows = [
-                (w, len(sym.strip("·").split("··"))) for w, sym in syms.items()
-            ]
-            lookup = df.sparkSession.createDataFrame(
-                lkp_rows, "w STRING, n_sym INT"
+            .select(
+                id_col,
+                "n_words",
+                F.col("n_symbols").cast("bigint").alias("n_symbols"),
+                F.round(
+                    F.col("n_symbols") / F.col("n_words").cast("double"), 4
+                ).alias("symbols_per_word"),
             )
-            words = df.select(
-                F.col(id_col), F.explode(tokens(text_col)).alias("w")
-            ).filter(F.col("w").rlike("^[a-z0-9]+$"))
-            return (
-                words.join(F.broadcast(lookup), "w")
-                .groupBy(id_col)
-                .agg(
-                    F.count("*").alias("n_words"),
-                    F.sum("n_sym").alias("n_symbols"),
-                )
-                .select(
-                    id_col,
-                    "n_words",
-                    F.col("n_symbols").cast("bigint").alias("n_symbols"),
-                    F.round(
-                        F.col("n_symbols") / F.col("n_words").cast("double"), 4
-                    ).alias("symbols_per_word"),
-                )
-            )
+        )
     vocab = vocab0.withColumn(
         "sym", F.regexp_replace("w", "(.)", "·$1·")
     ).persist()

@@ -71,15 +71,17 @@ def estimated_rows(df: DataFrame) -> int | None:
         return None
 
 
-def choose_similarity_strategy(
-    left: DataFrame,
-    right: DataFrame,
-    max_exact_pairs: int = 50_000_000,
-) -> str:
+# Estimated left x right pair count above which a similarity join
+# leaves exact BLAS brute force for LSH-bucketed candidates.
+MAX_EXACT_PAIRS = 50_000_000
+
+
+def choose_similarity_strategy(left: DataFrame, right: DataFrame) -> str:
     """Cost-based routing for similarity joins: 'exact' (BLAS
-    brute-force) while the estimated pair count is tractable, else
-    'lsh' (bucketed candidates, operators/ann.py). The estimate comes
-    from Catalyst plan statistics — no job runs to decide.
+    brute-force) while the estimated pair count is at most
+    ``MAX_EXACT_PAIRS``, else 'lsh' (bucketed candidates,
+    operators/ann.py). The estimate comes from Catalyst plan
+    statistics — no job runs to decide.
 
     This is the engine-level stand-in for the optional custom Catalyst
     rewrite rule (SURVEY.md §4): same decision, made at operator-
@@ -88,7 +90,34 @@ def choose_similarity_strategy(
     nl, nr = estimated_rows(left), estimated_rows(right)
     if nl is None or nr is None:
         return "exact"
-    return "exact" if nl * nr <= max_exact_pairs else "lsh"
+    return "exact" if nl * nr <= MAX_EXACT_PAIRS else "lsh"
+
+
+# Row budget for pulling an iterative operator's loop state (an edge
+# list, a word-type vocabulary) to the driver. take() yields Python Row
+# objects (~100+ bytes each, not the 16 raw bytes of two longs) and the
+# driver loops build dicts over them — ~100 MB of driver heap here.
+DRIVER_ROWS = 100_000
+
+
+def driver_rows(df: DataFrame) -> list | None:
+    """Driver-or-cluster routing for the iterative graph and vocab
+    operators (connected components, k-core, label propagation, BPE).
+
+    Returns ``df``'s rows when there are at most ``DRIVER_ROWS`` of
+    them — the caller then runs its loop in one Python pass — or
+    ``None``, and the caller runs its per-round Spark loop. One bounded
+    ``take(DRIVER_ROWS + 1)`` both sizes and fetches, so the small path
+    materializes ``df`` exactly once. Each distributed round costs a
+    shuffle (often plus a checkpoint), which at small inputs is pure
+    stage latency.
+
+    ``DRIVER_ROWS`` is read at call time, so tests force the
+    distributed path by monkeypatching it to 0.
+    """
+    limit = DRIVER_ROWS
+    rows = df.take(limit + 1)
+    return rows if len(rows) <= limit else None
 
 
 # Cache-release discipline (r8 advisor note -> r10 resolution):

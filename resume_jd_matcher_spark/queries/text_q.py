@@ -363,10 +363,11 @@ JOIN (SELECT cluster_rep, count(*) AS cluster_size
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V8 completion: MinHash-LSH candidate pairs → transitive
-    near-dup CLUSTERS via iterative hash-min connected components
-    (operators/cluster.py). The oracle is a DuckDB recursive CTE
-    computing min-reachable-id per node — the same fixpoint the
-    Spark loop converges to. Keep/drop policy downstream is
+    near-dup CLUSTERS via connected components (operators/cluster.py:
+    driver union-find, or large-star/small-star above
+    ``optimize.DRIVER_ROWS`` edges). The oracle is a DuckDB recursive
+    CTE computing min-reachable-id per node — the same labels both
+    routes produce. Keep/drop policy downstream is
     ``doc_id = cluster_rep``."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     edges = dedup.minhash_lsh_candidates(d, n_hashes=16, rows_per_band=4).filter(
@@ -1514,11 +1515,11 @@ JOIN (SELECT cluster_rep, count(*) AS cluster_size
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V8 scale alternative: the SAME near-dup clusters as
     dedup_clusters, resolved by large-star/small-star alternation
-    (Kiveris et al. 2014) instead of hash-min — O(log² n) rounds
-    regardless of graph diameter, the variant the hash-min
-    non-convergence warning recommends for adversarial chains. Same
-    recursive-CTE oracle; identical labels prove the two algorithms
-    agree (operators/cluster.py:connected_components_star)."""
+    (Kiveris et al. 2014) even at fixture scale — O(log² n) rounds
+    regardless of graph diameter, the path dedup_clusters takes above
+    ``optimize.DRIVER_ROWS`` edges. Same recursive-CTE oracle;
+    identical labels prove the star loop agrees with the driver
+    union-find (operators/cluster.py:connected_components_star)."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     edges = dedup.minhash_lsh_candidates(d, n_hashes=16, rows_per_band=4).filter(
         F.col("est_jaccard") >= 0.95

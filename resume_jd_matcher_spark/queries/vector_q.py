@@ -119,7 +119,7 @@ def q_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V6: all pairs within squared-L2 distance 1.5 (left side bounded
     to 50 query rows) — the batch generalization of top-k search.
     Routed by ``choose_similarity_strategy`` (Catalyst stats): at this
-    pair count it takes the exact BLAS path; past ``max_exact_pairs``
+    pair count it takes the exact BLAS path; past ``MAX_EXACT_PAIRS``
     the same call degrades gracefully to LSH-bucketed candidates."""
     emb = load_table(spark, sf_dir, "embeddings")
     left = emb.filter(F.col("vec_id") < 50).select(

@@ -11,6 +11,7 @@ from resume_jd_matcher_spark.operators.cluster import (
     dedup_clusters,
 )
 from resume_jd_matcher_spark.operators.textstats import winnow_fingerprints
+from resume_jd_matcher_spark.plans import optimize
 
 
 def _edges(spark, pairs):
@@ -43,12 +44,17 @@ def test_cc_long_chain_converges(spark):
     assert len(rows) == n + 1
 
 
-def test_cc_local_equals_distributed(spark):
-    # both routes must produce identical labels
-    pairs = [(1, 2), (2, 3), (10, 11), (11, 12), (12, 13), (20, 21), (3, 30)]
+def test_cc_local_equals_distributed(spark, monkeypatch):
+    # both routes must produce identical labels; (5, 5) is a node whose
+    # only edge is a self-loop
+    pairs = [
+        (1, 2), (2, 3), (10, 11), (11, 12), (12, 13), (20, 21), (3, 30),
+        (5, 5),
+    ]
     e = _edges(spark, pairs)
     local = connected_components(e)  # small graph -> union-find path
-    dist = connected_components(e, local_threshold=0)  # force hash-min loop
+    monkeypatch.setattr(optimize, "DRIVER_ROWS", 0)
+    dist = connected_components(e)  # forced large-star/small-star loop
     assert {(r["node"], r["cluster_rep"]) for r in local.collect()} == {
         (r["node"], r["cluster_rep"]) for r in dist.collect()
     }
@@ -215,7 +221,7 @@ def test_text_ops_survive_degenerate_docs(spark):
 
 
 @pytest.mark.slow
-def test_dedup_pipeline_at_scale_smoke(spark):
+def test_dedup_pipeline_at_scale_smoke(spark, monkeypatch):
     """Scale smoke: 20k generated docs (40x the sf0.01 fixture)
     through MinHash-LSH candidates -> DISTRIBUTED connected
     components (local route disabled). Verifies the planted near-dup
@@ -235,7 +241,8 @@ def test_dedup_pipeline_at_scale_smoke(spark):
     edges = dedup.minhash_lsh_candidates(docs, n_hashes=16, rows_per_band=4).filter(
         F.col("est_jaccard") >= 0.9
     )
-    comp = connected_components(edges, local_threshold=0, max_iter=20)
+    monkeypatch.setattr(optimize, "DRIVER_ROWS", 0)
+    comp = connected_components(edges, max_iter=20)
     labels = {r["node"]: r["cluster_rep"] for r in comp.collect()}
     dedup.release_persisted()
     # planted structure: (id-1, id) for id % 10 == 9 must co-cluster
@@ -305,29 +312,10 @@ def test_winnow_neardup_at_scale_smoke(spark):
     assert planted_hits > 1200  # ~2000 planted; drop-out noise loses some
 
 
-def test_connected_components_warns_without_convergence(spark):
-    """A chain longer than max_iter must not silently return
-    non-transitive labels — the hash-min loop warns when it exits on
-    the iteration cap."""
-    import warnings
-
-    from resume_jd_matcher_spark.operators.cluster import connected_components
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], ["left_id", "right_id"]
-    )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        connected_components(
-            chain, max_iter=2, local_threshold=0
-        ).collect()
-    assert any("did not converge" in str(x.message) for x in w)
-
-
 def test_connected_components_star_warns_on_iteration_cap(spark):
     """The large-star/small-star variant's final hi->lo labeling is
-    only valid at the star fixpoint — exiting via max_iter must warn,
-    mirroring the hash-min sibling."""
+    only valid at the star fixpoint — exiting via max_iter must warn
+    instead of returning silently-wrong clusters."""
     import warnings
 
     from resume_jd_matcher_spark.operators.cluster import (

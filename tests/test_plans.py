@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from resume_jd_matcher_spark.plans import optimize
 from resume_jd_matcher_spark.plans.optimize import (
     assert_broadcast,
     assert_pushed_filter,
@@ -52,18 +53,26 @@ def test_topk_shuffles_only_partials(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_choose_similarity_strategy(spark):
+def test_choose_similarity_strategy(spark, monkeypatch):
     from resume_jd_matcher_spark.plans.optimize import choose_similarity_strategy
 
     emb = load_table(spark, SF, "embeddings")
     small = emb.limit(10)
     assert choose_similarity_strategy(small, small) == "exact"
-    assert (
-        choose_similarity_strategy(emb, emb, max_exact_pairs=1000) == "lsh"
-    )
+    monkeypatch.setattr(optimize, "MAX_EXACT_PAIRS", 1000)
+    assert choose_similarity_strategy(emb, emb) == "lsh"
 
 
-def test_similarity_join_auto_routes_to_lsh(spark):
+def test_driver_rows_boundary(spark, monkeypatch):
+    """At most DRIVER_ROWS rows come back to the driver; one more
+    routes to the cluster (None); an empty frame is an empty list."""
+    monkeypatch.setattr(optimize, "DRIVER_ROWS", 3)
+    assert [r.id for r in optimize.driver_rows(spark.range(3))] == [0, 1, 2]
+    assert optimize.driver_rows(spark.range(4)) is None
+    assert optimize.driver_rows(spark.range(0)) == []
+
+
+def test_similarity_join_auto_routes_to_lsh(spark, monkeypatch):
     """Above the pair-count threshold the router must engage the
     LSH-bucketed route: equi-join on the bucket id (no crossJoin, no
     MapInPandas), and every emitted pair must be a true under-threshold
@@ -84,11 +93,14 @@ def test_similarity_join_auto_routes_to_lsh(spark):
         F.col("vec_id").alias("right_id"),
         F.col("embedding").alias("right_embedding"),
     )
-    assert choose_similarity_strategy(left, right, max_exact_pairs=100) == "lsh"
-
-    routed = similarity_join_auto(
-        left, right, threshold=1.2, dedup_pairs=True, max_exact_pairs=100
-    )
+    # the route is fixed when the join is built, so the patch only has
+    # to cover construction
+    with monkeypatch.context() as m:
+        m.setattr(optimize, "MAX_EXACT_PAIRS", 100)
+        assert choose_similarity_strategy(left, right) == "lsh"
+        routed = similarity_join_auto(
+            left, right, threshold=1.2, dedup_pairs=True
+        )
     plan = physical_plan(routed)
     assert "CartesianProduct" not in plan
     assert "MapInPandas" not in plan  # not the BLAS route

@@ -106,12 +106,13 @@ class TestLabelPropagation:
         assert out[1] == out[2] == out[3] == 1
         assert out[10] == out[11] == out[12] == 10
 
-    def test_distributed_path_matches_local(self, spark):
-        """Force the DataFrame loop (threshold 0) and compare labels
+    def test_distributed_path_matches_local(self, spark, monkeypatch):
+        """Force the DataFrame loop (DRIVER_ROWS=0) and compare labels
         with the driver path on the same graph."""
         from resume_jd_matcher_spark.operators.cluster import (
             label_propagation_sync,
         )
+        from resume_jd_matcher_spark.plans import optimize
 
         edges = [(1, 2), (2, 3), (1, 3), (3, 4), (10, 11)]
         sym = spark.createDataFrame(
@@ -122,11 +123,10 @@ class TestLabelPropagation:
             r["node"]: r["community"]
             for r in label_propagation_sync(sym, n_iter=4).collect()
         }
+        monkeypatch.setattr(optimize, "DRIVER_ROWS", 0)
         dist = {
             r["node"]: r["community"]
-            for r in label_propagation_sync(
-                sym, n_iter=4, local_threshold=0
-            ).collect()
+            for r in label_propagation_sync(sym, n_iter=4).collect()
         }
         assert local == dist
 

@@ -18,7 +18,8 @@ SF = "/root/testdata/sf0.001"
 HEADLINERS = {
     "topk_similarity": "broadcast query side; corpus streams; no pair sort",
     "minhash_lsh": "candidates from (band_id, band_sig) equi-join, no crossJoin",
-    "dedup_clusters": "small-graph route: one bounded take, driver union-find",
+    "dedup_clusters": "small-graph route (plans/optimize.driver_rows): one "
+    "bounded take, driver union-find; star loop above DRIVER_ROWS edges",
     "range_join_binned": "hash equi-join on (key, bin) - no BroadcastNestedLoopJoin",
     "rollup_timeseries": "hour/day re-aggregate minute partials, raw scanned once",
     "winnow_fingerprint": "two Window nodes, ONE per-doc sort, no Python",

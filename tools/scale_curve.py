@@ -56,6 +56,7 @@ def kernels():
     from pyspark.sql import functions as F
 
     from resume_jd_matcher_spark.operators import cluster, dedup
+    from resume_jd_matcher_spark.plans import optimize
     from resume_jd_matcher_spark.sources.io import load_table
 
     def docs(spark, sf_dir):
@@ -80,9 +81,10 @@ def kernels():
     def k_label_propagation(spark, sf_dir):
         # UNCAPPED twin of q_label_propagation (the registered query
         # caps doc_id for oracle boundedness): banded candidates ->
-        # symmetrize -> fixed-round LPA. local_threshold=0 forces the
+        # symmetrize -> fixed-round LPA. DRIVER_ROWS=0 forces the
         # DISTRIBUTED per-round join+agg path — the 100-TB route is
-        # what the curve must certify, not the driver loop.
+        # what the curve must certify, not the driver loop. The route
+        # is picked when the call returns, so the override ends there.
         pairs = dedup.minhash_lsh_candidates(
             docs(spark, sf_dir), n_hashes=16, rows_per_band=4
         ).filter(F.col("est_jaccard") >= 0.5)
@@ -100,9 +102,11 @@ def kernels():
                 )
             ).alias("_e")
         ).select("_e.a", "_e.b")
-        return cluster.label_propagation_sync(
-            sym, n_iter=4, local_threshold=0
-        )
+        saved, optimize.DRIVER_ROWS = optimize.DRIVER_ROWS, 0
+        try:
+            return cluster.label_propagation_sync(sym, n_iter=4)
+        finally:
+            optimize.DRIVER_ROWS = saved
 
     def k_bcubed(spark, sf_dir):
         # UNCAPPED twin of q_bcubed_eval's metric half: near-dup
