@@ -164,11 +164,6 @@ def parse_scores(
     )
 
 
-def normalize_distance_score(dist: Column) -> Column:
-    """T5: ``round(10 * 1/(1+d), 2)`` (reference rag_model_mass.py:13-15)."""
-    return F.round(F.lit(10.0) / (F.lit(1.0) + dist), 2)
-
-
 def mean_score(
     scores: DataFrame, id_col: str = "doc_id", score_col: str = "score"
 ) -> DataFrame:

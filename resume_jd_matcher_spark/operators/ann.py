@@ -204,7 +204,7 @@ def ivf_centroids(
 ) -> DataFrame:
     """IVF coarse quantizer: element-wise mean vector per partition
     (the fixture's label column stands in for k-means cluster ids —
-    at scale, MLlib KMeans fits the same shape).
+    at scale, ``lloyd_kmeans_partition`` learns them).
 
     Long-form posexplode → groupBy(partition, dim) avg → re-assembled
     ordered array: two narrow shuffles, no driver collection.
@@ -289,8 +289,8 @@ def _argmin_literal(vec_sql: str, cents: list[tuple[int, list[float]]]):
     """Expression-side nearest-centroid id against LITERAL centroids:
     array_min over (dist, cid) structs — identical squared-L2
     arithmetic (same zip_with/aggregate fold) and identical
-    (dist, cid) tie-break as the groupBy-argmin path, so the two
-    routes are trajectory-equivalent.
+    (dist, cid) tie-break as the broadcast-join argmin, so the two
+    encode routes are trajectory-equivalent.
 
     ``vec_sql`` is a SQL expression string (an ARRAY<DOUBLE>), and the
     whole argmin is built as ONE parsed SQL expression: the former
@@ -300,12 +300,6 @@ def _argmin_literal(vec_sql: str, cents: list[tuple[int, list[float]]]):
     same tree in <2 ms). ``repr(float)`` round-trips doubles exactly
     and SQL ``...D`` literals parse IEEE-correctly, so the Literal
     values are bit-identical to F.lit's."""
-    return F.expr(_argmin_literal_sql(vec_sql, cents))
-
-
-def _argmin_literal_sql(
-    vec_sql: str, cents: list[tuple[int, list[float]]]
-) -> str:
     arms = []
     for cid, c in cents:
         lit = "array(" + ",".join(repr(float(x)) + "D" for x in c) + ")"
@@ -314,7 +308,80 @@ def _argmin_literal_sql(
             "(x - y) * (x - y)), 0.0D, (acc, v) -> acc + v) AS _d, "
             f"{int(cid)} AS _cid)"
         )
-    return f"array_min(array({','.join(arms)}))._cid"
+    return F.expr(f"array_min(array({','.join(arms)}))._cid")
+
+
+def _long_form(
+    df: DataFrame,
+    id_col: str,
+    group_col: str,
+    columns: dict[int, tuple[str, str]],
+) -> DataFrame:
+    """(id_col, group_col, _v): one row per (vector, group), where
+    group g's vector is the SQL expression ``columns[g][1]`` over
+    ``df`` (the same {g: (out_col, vec_sql)} map ``encode_nearest``
+    takes) — the input shape of lloyd_kmeans_grouped and of the
+    join-route encode. One parsed ``inline`` generator, no per-group
+    scan."""
+    arms = ", ".join(
+        f"struct({int(g)} AS `{group_col}`, {sql} AS _v)"
+        for g, (_, sql) in sorted(columns.items())
+    )
+    return df.select(F.col(id_col), F.expr(f"inline(array({arms}))"))
+
+
+def encode_nearest(
+    corpus: DataFrame,
+    cents: DataFrame,
+    columns: dict[int, tuple[str, str]],
+    group_col: str = "_grp",
+    id_col: str = "vec_id",
+    known_total: int | None = None,
+) -> DataFrame:
+    """The one encode step for fitted centroids: ``corpus`` plus, for
+    each group g in ``columns`` = {g: (out_col, vec_sql)}, an INT
+    column ``out_col`` holding the id of the group-g centroid nearest
+    to the ARRAY<DOUBLE> SQL expression ``vec_sql``.
+
+    ``cents`` is a fitted (group_col, _cid, centroid) table —
+    lloyd_kmeans_grouped's output, localCheckpoint'ed, so reading it
+    never reruns the fit. Both routes take the nearest centroid by
+    the same squared-L2 fold and (dist, cid) tie-break, so they
+    return identical ids:
+
+    - within _LIT_ASSIGN_MAX_VALUES (``_grouped_literals`` decides,
+      with ``known_total`` = the table's value count when the caller
+      knows it plan-side): every column in ONE narrow literal-argmin
+      projection — no shuffle, no join-back;
+    - above it: the long form joins the broadcast centroid table on
+      the group key, and ONE groupBy(id) takes every group's
+      min(dist, cid) at once (the argmin and the pivot back to one
+      row per id in a single aggregate), joined back to ``corpus``.
+    """
+    by_group = _grouped_literals(cents, group_col, known_total)
+    if by_group is not None:
+        return corpus.select(
+            "*",
+            *[
+                _argmin_literal(sql, by_group[g]).cast("int").alias(out)
+                for g, (out, sql) in sorted(columns.items())
+            ],
+        )
+    cand = _long_form(corpus, id_col, group_col, columns).join(
+        F.broadcast(cents.select(group_col, "_cid", "centroid")), group_col
+    )
+    best = F.struct(
+        squared_l2(F.col("_v"), F.col("centroid")).alias("_d"), F.col("_cid")
+    )
+    wide = cand.groupBy(id_col).agg(
+        *[
+            F.min(F.when(F.col(group_col) == g, best))["_cid"]
+            .cast("int")
+            .alias(out)
+            for g, (out, _) in sorted(columns.items())
+        ]
+    )
+    return corpus.join(wide, id_col)
 
 
 def lloyd_kmeans_partition(
@@ -330,196 +397,31 @@ def lloyd_kmeans_partition(
     k-means with deterministic seeds (the ``n_clusters`` lowest-id
     vectors) and per-iteration centroid rounding to ``round_dp``
     decimals, which quantizes away cross-engine float-summation-order
-    noise so the whole trajectory is reproducible in ANSI SQL — the
-    twin of the MLlib KMeans|| path (``kmeans_partition``), trading
-    convergence quality for bit-stability. Returns
+    noise so the whole trajectory is reproducible in ANSI SQL —
+    trading convergence quality for bit-stability. Returns
     (assigned corpus + out_col, final centroids (out_col, centroid)).
 
-    Each iteration is a broadcast of the ≤n_clusters centroids, a
-    codegen'd argmin (min(struct(dist, cid, vec)) — the vector rides
-    the min-struct so no join-back is needed), and a map-side-combined
-    per-dim mean — three narrow shuffles, no driver collection; only
-    the FINAL centroid table is localCheckpoint'ed (intermediate
-    iterations are single-consumer, so materializing them added
-    blocking jobs without reuse — r13). At 100 TB: fit on a sample,
+    The one-group case of ``lloyd_kmeans_grouped`` (every row tagged
+    group 0), encoded by ``encode_nearest``. On the literal route the
+    encode first runs one scalar size job over the checkpointed
+    ≤n_clusters-row centroid table — the budget check that keeps an
+    over-budget table off the driver. At 100 TB: fit on a sample,
     assign the full corpus — identical shape, sample-bounded
     iteration cost."""
-    v = corpus.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+    columns = {0: (out_col, f"transform(`{vec_col}`, x -> double(x))")}
+    cents = lloyd_kmeans_grouped(
+        _long_form(corpus, id_col, "_grp", columns),
+        n_clusters=n_clusters,
+        n_iter=n_iter,
+        group_col="_grp",
+        id_col=id_col,
+        vec_col="_v",
+        round_dp=round_dp,
     )
-    seed_w = Window.orderBy(id_col)
-    cents = v.orderBy(id_col).limit(n_clusters).select(
-        (F.row_number().over(seed_w) - 1).alias("_cid"),
-        F.transform("_v", lambda x: F.round(x, round_dp)).alias("centroid"),
+    assigned = encode_nearest(
+        corpus, cents, columns, group_col="_grp", id_col=id_col
     )
-    if n_iter == 0:
-        # no iteration will re-derive it: materialize here so the two
-        # downstream consumers (assign + returned cents) compute it once
-        cents = cents.localCheckpoint()
-
-    def assign_join(cents_df: DataFrame, src: DataFrame) -> DataFrame:
-        cand = src.crossJoin(F.broadcast(cents_df))
-        d = squared_l2(F.col("_v"), F.col("centroid"))
-        return (
-            cand.select(F.col(id_col), F.col("_cid"), d.alias("_d"))
-            .groupBy(id_col)
-            .agg(F.min(F.struct("_d", "_cid")).alias("_m"))
-            .select(F.col(id_col), F.col("_m._cid").alias("_cid"))
-        )
-
-    def lits(cents_df: DataFrame) -> list[tuple[int, list[float]]]:
-        # bounded by construction: n_clusters rows, already
-        # materialized by the localCheckpoint — the collect reads the
-        # checkpoint, it does not rerun the iteration
-        return sorted(
-            (r["_cid"], list(r["centroid"])) for r in cents_df.collect()
-        )
-
-    # Measured dead end (r11): computing the per-dim means as ONE
-    # hash agg of dim avg(_v[i]) columns — to avoid this posexplode's
-    # rows x dim long-form shuffle — measured ~1.7x SLOWER end to end
-    # (ivf_pq_topk 3.8 -> 6.3 s, semdedup 1.9 -> 5.2 s at sf0.1): the
-    # 64 per-row GetArrayItem aggregate updates cost more than the
-    # narrow explode shuffle they replace. The long form stays.
-    #
-    # r12: the literal-argmin route applies ONLY to the final
-    # full-corpus assignment, where it deletes a corpus-sized shuffle
-    # (the assign groupBy + join-back on id). Inside the iteration
-    # loop it was measured SLOWER (per-iteration centroid collect +
-    # a bigger whole-stage-codegen compile each round beat the tiny
-    # sample-bounded shuffles they replaced), so the loop keeps the
-    # broadcast-join argmin.
-    # r13 (guide §2.4 — remove shuffles outright): the per-iteration
-    # assignment is EXPRESSION-side. The ≤n_clusters centroid table is
-    # collapsed to ONE sorted array row, broadcast, and each vector
-    # row computes argmin via array_min(transform(...)) over the same
-    # squared-L2 + (dist, cid) struct ordering the old
-    # groupBy-min(struct) used — identical winner, identical values,
-    # but the data-sized argmin exchange AND the join-back exchange
-    # per iteration are both gone; each iteration shuffles only the
-    # long-form per-dim means. Unlike the literal-argmin route
-    # (measured slower in-loop: per-round collect + a k×dim-sized
-    # codegen), the centroids here stay DATA — the codegen is
-    # k/dim-independent and there is no driver round-trip. Only the
-    # LAST iteration's centroid table is localCheckpoint'ed:
-    # intermediates are single-consumer, so per-iteration
-    # materialization was pure blocking-job latency.
-    for it in range(n_iter):
-        cl = cents.agg(
-            F.array_sort(F.collect_list(F.struct("_cid", "centroid"))).alias(
-                "_cl"
-            )
-        )
-        cand = v.crossJoin(F.broadcast(cl))
-        best = F.array_min(
-            F.transform(
-                "_cl",
-                lambda c: F.struct(
-                    squared_l2(F.col("_v"), c["centroid"]).alias("_d"),
-                    c["_cid"].alias("_cid"),
-                ),
-            )
-        )
-        a = cand.select(best["_cid"].alias("_cid"), "_v")
-        long = a.select("_cid", F.posexplode("_v").alias("_dim", "_x"))
-        per_dim = long.groupBy("_cid", "_dim").agg(F.avg("_x").alias("_cv"))
-        cents = per_dim.groupBy("_cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_dim", "_cv"))),
-                lambda s: F.round(s["_cv"], round_dp),
-            ).alias("centroid")
-        )
-        if it == n_iter - 1:
-            cents = cents.localCheckpoint()
-
-    # Final full-corpus assignment: ONE collect of the (already
-    # checkpointed, <=n_clusters-row) centroid table decides the
-    # route AND supplies both the literal centroids and the dimension
-    # — no separate first()-probe job (r12: the probe + collect pair
-    # added ~1 s of pure job latency to semdedup's 2000-row fit; one
-    # bounded collect is the price of deleting the corpus-sized
-    # assign-shuffle + join-back that the join route pays at scale).
-    cl = lits(cents)
-    dim = len(cl[0][1]) if cl else 0
-    if 0 < n_clusters * dim <= _LIT_ASSIGN_MAX_VALUES:
-        assigned = corpus.withColumn(
-            out_col,
-            _argmin_literal(f"transform(`{vec_col}`, x -> double(x))", cl),
-        )
-    else:
-        assigned = corpus.join(
-            assign_join(cents, v).withColumnRenamed("_cid", out_col), id_col
-        )
-    return assigned, cents.withColumnRenamed("_cid", out_col)
-
-
-def assign_to_centroids_grouped(
-    vectors: DataFrame,
-    cents: DataFrame,
-    group_col: str = "_grp",
-    id_col: str = "vec_id",
-    vec_col: str = "_v",
-    cid_col: str = "_cid",
-    collectable: bool = True,
-    known_total_vals: int | None = None,
-) -> DataFrame:
-    """Broadcast-argmin encode, one independent centroid set per
-    group: each (group, vector) row joins the ≤groups×k-row broadcast
-    centroid table on the group key (a plain BroadcastHashJoin — no
-    nested-loop join anywhere) and takes the nearest centroid with the
-    same squared-L2 + (dist, cid) struct-min tie-break as the
-    ungrouped Lloyd assign, so a sample-fit + full-corpus encode is
-    trajectory-identical to a full-corpus fit whenever the sample
-    covers the corpus. ``vec_col`` must already be ARRAY<DOUBLE>.
-    Output: (group_col, id_col, cid_col).
-
-    r12: when the centroid table fits the literal budget AND is
-    already materialized (``collectable=True``, the fit paths — the
-    table is localCheckpoint'ed there), the assignment is a
-    shuffle-free narrow projection via _grouped_argmin_literal
-    instead of the join+argmin-agg; the join route remains the
-    at-scale path. Callers that can compute the centroid value count
-    plan-side (rows × dim) pass ``known_total_vals`` so the budget
-    probe costs zero Spark jobs."""
-    if collectable:
-        by_group = _grouped_literals(
-            cents.select(
-                F.col(group_col), F.col(cid_col).alias("_cid"), "centroid"
-            ),
-            group_col,
-            known_total=known_total_vals,
-        )
-        if by_group is not None:
-            return vectors.select(
-                F.col(group_col),
-                F.col(id_col),
-                _grouped_argmin_literal(
-                    f"`{vec_col}`", group_col, by_group
-                ).alias(cid_col),
-                # a group with no fitted centroids falls off the
-                # when-chain as NULL; the join route drops it (inner
-                # join) — mirror that
-            ).filter(F.col(cid_col).isNotNull())
-    cand = vectors.join(
-        F.broadcast(
-            cents.select(
-                F.col(group_col),
-                F.col(cid_col).alias("__cid"),
-                "centroid",
-            )
-        ),
-        group_col,
-    )
-    d = squared_l2(F.col(vec_col), F.col("centroid"))
-    return (
-        cand.select(F.col(group_col), F.col(id_col), F.col("__cid"), d.alias("_d"))
-        .groupBy(group_col, id_col)
-        .agg(F.min(F.struct("_d", "__cid")).alias("_m"))
-        .select(
-            F.col(group_col), F.col(id_col), F.col("_m.__cid").alias(cid_col)
-        )
-    )
+    return assigned, cents.select(F.col("_cid").alias(out_col), "centroid")
 
 
 def lloyd_kmeans_grouped(
@@ -532,19 +434,19 @@ def lloyd_kmeans_grouped(
     round_dp: int = 6,
     n_clusters_by_group: dict | None = None,
 ) -> DataFrame:
-    """Deterministic fixed-iteration Lloyd k-means fitted INDEPENDENTLY
-    per group in one shared pass — the vectorized twin of running
-    ``lloyd_kmeans_partition`` once per group (identical per-group
-    trajectory: lowest-id seeds within the group, per-iteration
-    centroid rounding, same argmin tie-break), but every iteration is
-    ONE scan of the long-form input instead of one scan per group.
-    With m groups (PQ subspaces) that collapses m×(n_iter+1)
-    full-input passes into n_iter+1, and every join is an equi-join on
-    the group key against a broadcast ≤groups×k centroid table.
+    """Deterministic fixed-iteration Lloyd k-means — the engine's one
+    Lloyd loop — fitted INDEPENDENTLY per group in one shared pass
+    (lowest-id seeds within the group, per-iteration centroid
+    rounding, (dist, cid) argmin tie-break). Every iteration is ONE
+    scan of the long-form input however many groups there are: with
+    m groups (PQ subspaces) that is n_iter+1 passes instead of
+    m×(n_iter+1), and every join is an equi-join on the group key
+    against a broadcast ≤groups×k centroid table.
 
     Input: (group_col, id_col, vec_col) long form, one row per
     (group, vector). Returns centroids (group_col, _cid, centroid),
-    localCheckpoint'ed so downstream lineage stays flat.
+    localCheckpoint'ed so downstream lineage stays flat; encode them
+    with ``encode_nearest``.
 
     ``n_clusters_by_group`` optionally overrides the cluster count
     per group value (any group absent from the dict keeps
@@ -580,23 +482,28 @@ def lloyd_kmeans_grouped(
         )
     )
     if n_iter == 0:
+        # no iteration will re-derive it: materialize here so the
+        # encode and the returned table compute it once
         cents = cents.localCheckpoint()
-    # Long-form per-dim means, same rationale as
-    # lloyd_kmeans_partition (the wide avg(_v[i]) agg measured slower
-    # — see the note there). The iteration loop keeps the
-    # broadcast-join assign (collectable=False): the literal-argmin
-    # route measured SLOWER per iteration (a centroid collect + a
-    # bigger whole-stage-codegen compile each round outweigh the
-    # tiny sample-bounded shuffles saved); it pays off only on the
-    # final full-corpus encode, where the caller's
-    # assign_to_centroids_grouped call takes it (collectable=True).
-    # r13 (guide §2.4, mirroring lloyd_kmeans_partition): the
+    # Measured dead end (r11): computing the per-dim means as ONE
+    # hash agg of dim avg(_v[i]) columns — to avoid this posexplode's
+    # rows x dim long-form shuffle — measured ~1.7x SLOWER end to end
+    # (ivf_pq_topk 3.8 -> 6.3 s, semdedup 1.9 -> 5.2 s at sf0.1): the
+    # 64 per-row GetArrayItem aggregate updates cost more than the
+    # narrow explode shuffle they replace. The long form stays.
+    #
+    # r12: the literal-argmin route applies ONLY to the final
+    # full-corpus encode (encode_nearest), where it deletes a
+    # corpus-sized shuffle. Inside this loop it measured SLOWER (a
+    # centroid collect + a bigger whole-stage-codegen compile each
+    # round beat the tiny sample-bounded shuffles they replaced).
+    # r13 (guide §2.4 — remove shuffles outright): the per-iteration
     # assignment is EXPRESSION-side — each group's centroid set
     # collapses to one sorted array row, broadcast-joined on the group
     # key, and every vector row computes argmin via
     # array_min(transform(...)) with the identical squared-L2 +
-    # (dist, cid) struct ordering. The per-iteration data-sized argmin
-    # exchange and the (group, id) join-back are both gone; each
+    # (dist, cid) struct ordering. The centroids stay DATA (the
+    # codegen is k/dim-independent, no driver round-trip), and each
     # iteration shuffles only the long-form per-dim means. Only the
     # FINAL iteration's centroid table is localCheckpoint'ed —
     # intermediates are single-consumer, so per-iteration
@@ -668,43 +575,6 @@ def _grouped_literals(
             (r["_cid"], list(r["centroid"]))
         )
     return {g: sorted(cl) for g, cl in by_group.items()}
-
-
-def _grouped_argmin_literal(vec_sql: str, group_col: str, by_group: dict):
-    """when-chain over group values, one _argmin_literal per group —
-    same trajectory as assign_to_centroids_grouped on the join
-    route. ``vec_sql`` is a SQL expression string (see
-    _argmin_literal); the whole CASE chain is one parsed expression."""
-    arms = "".join(
-        f" WHEN `{group_col}` = {int(g)} THEN "
-        + _argmin_literal_sql(vec_sql, by_group[g])
-        for g in sorted(by_group)
-    )
-    return F.expr(f"CASE{arms} END")
-
-
-def kmeans_partition(
-    corpus: DataFrame,
-    n_clusters: int = 8,
-    vec_col: str = "embedding",
-    out_col: str = "_kpart",
-    seed: int = 42,
-) -> DataFrame:
-    """Learned IVF coarse quantizer: MLlib KMeans cluster ids as the
-    routing partition (the production replacement for the fixture's
-    label column in ``ivf_topk``). Fixed seed → reproducible
-    assignment; the fit itself is Spark's scalable KMeans|| — at
-    100 TB, fit on a sample, ``transform`` streams the full corpus.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array  # noqa: F401
-
-    feat = corpus.withColumn("_features", array_to_vector(F.col(vec_col)))
-    km = KMeans(
-        k=n_clusters, seed=seed, featuresCol="_features", predictionCol=out_col
-    )
-    model = km.fit(feat)
-    return model.transform(feat).drop("_features")
 
 
 def lsh_multiprobe_topk(

@@ -15,9 +15,9 @@ full-width vector ever moves through the ranking join.
 
 Scale shape: codebook fit is sample-bounded (fit on a sample, encode
 the full corpus — same discipline as ``lloyd_kmeans_partition``);
-encoding is m broadcast-argmin passes; ADC ranking is a broadcast
-equi-join on (subspace, code) followed by a map-side-combined sum —
-never a crossJoin against raw vectors.
+encoding is one ``encode_nearest`` step for all m subspaces; ADC
+ranking is a broadcast equi-join on (subspace, code) followed by a
+map-side-combined sum — never a crossJoin against raw vectors.
 """
 
 from __future__ import annotations
@@ -27,9 +27,71 @@ from pyspark.sql import functions as F
 
 from resume_jd_matcher_spark.functions.vector import squared_l2
 from resume_jd_matcher_spark.operators.ann import (
-    assign_to_centroids_grouped,
+    _long_form,
+    encode_nearest,
     lloyd_kmeans_grouped,
 )
+
+# Codebooks fit on the FIT_SAMPLE_ROWS lowest-id vectors. Spark plans
+# the sample's orderBy(id).limit(n) as a top-k whose selector
+# allocates a buffer sized by n BEFORE it reads a row, so this must
+# stay small: a limit of 10**9 exhausts the driver heap on any corpus.
+# Read at call time, so tests monkeypatch it.
+FIT_SAMPLE_ROWS = 100_000
+
+
+def _fit_encode(
+    corpus: DataFrame,
+    m: int,
+    k: int,
+    n_iter: int,
+    id_col: str,
+    vec_col: str,
+    round_dp: int,
+    coarse: tuple[str, int] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Shared PQ set-up: group s in 0..m-1 is subspace s (dims
+    [s·d/m, (s+1)·d/m), k codes each); ``coarse`` = (part_col, n_lists)
+    adds group -1, the full-width coarse quantizer. All groups fit in
+    ONE grouped Lloyd pass over the prefix sample and encode through
+    ``encode_nearest``. Returns (corpus + code_0..code_{m-1} [+
+    part_col], the fitted (subspace, _cid, centroid) table)."""
+    first = corpus.select(vec_col).first()
+    dim = len(first[0]) if first is not None and first[0] is not None else 0
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
+    sub = dim // m
+    dbl = f"transform(`{vec_col}`, x -> double(x))"
+    columns = {
+        s: (f"code_{s}", f"slice({dbl}, {s * sub + 1}, {sub})") for s in range(m)
+    }
+    k_by_group = None
+    total = k * dim  # m subspaces × k codes × sub values
+    if coarse is not None:
+        part_col, n_lists = coarse
+        columns[-1] = (part_col, dbl)
+        k_by_group = {-1: n_lists}
+        total += n_lists * dim
+    fit = corpus.select(id_col, vec_col).orderBy(id_col).limit(FIT_SAMPLE_ROWS)
+    cents = lloyd_kmeans_grouped(
+        _long_form(fit, id_col, "subspace", columns),
+        n_clusters=k,
+        n_iter=n_iter,
+        group_col="subspace",
+        id_col=id_col,
+        vec_col="_v",
+        round_dp=round_dp,
+        n_clusters_by_group=k_by_group,
+    )
+    encoded = encode_nearest(
+        corpus,
+        cents,
+        columns,
+        group_col="subspace",
+        id_col=id_col,
+        known_total=total,
+    )
+    return encoded, cents
 
 
 def pq_fit_encode(
@@ -40,7 +102,6 @@ def pq_fit_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_dp: int = 6,
-    fit_sample_rows: int = 100_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Fit ``m`` subspace codebooks on a bounded sample, encode the
     full corpus.
@@ -55,76 +116,22 @@ def pq_fit_encode(
     to ``round_dp``) run on that slice, so a SQL oracle can replay the
     exact trajectory per subspace.
 
-    The fit scans only the ``fit_sample_rows`` lowest-id vectors (a
+    The fit scans only the ``FIT_SAMPLE_ROWS`` lowest-id vectors (a
     deterministic prefix sample — the Lloyd seeds are the lowest ids
     anyway, so whenever the corpus fits inside the cap the trajectory
     is bit-identical to a full-corpus fit and the SQL oracle needs no
     sample clause). All ``m`` subspace codebooks are fitted in ONE
     grouped Lloyd pass (``lloyd_kmeans_grouped`` keyed by subspace):
     each iteration is a single scan of the long-form sample, not one
-    scan per subspace. Encoding the full corpus is one grouped
-    broadcast-argmin against the fitted m×k centroid table — at
+    scan per subspace. Encoding the full corpus is one
+    ``encode_nearest`` call against the fitted m×k centroid table — at
     100 TB the Lloyd iterations cost sample-sized shuffles, never
     full-corpus ones, and every join in the plan is an equi-join.
     """
-    dim = len(corpus.select(vec_col).first()[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    sub = dim // m
-
-    def long_form(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("subspace"),
-                            F.slice(vec_col, s * sub + 1, sub).alias("_sv"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("_e"),
-        ).select(
-            F.col(id_col),
-            F.col("_e.subspace").alias("subspace"),
-            F.col("_e._sv").alias("_sv"),
-        )
-
-    fit = corpus.select(id_col, vec_col).orderBy(id_col).limit(fit_sample_rows)
-    cents = lloyd_kmeans_grouped(
-        long_form(fit),
-        n_clusters=k,
-        n_iter=n_iter,
-        group_col="subspace",
-        id_col=id_col,
-        vec_col="_sv",
-        round_dp=round_dp,
+    encoded, cents = _fit_encode(
+        corpus.select(id_col, vec_col), m, k, n_iter, id_col, vec_col, round_dp
     )
-    corpus_long = long_form(corpus).select(
-        "subspace",
-        F.col(id_col),
-        F.transform("_sv", lambda x: x.cast("double")).alias("_v"),
-    )
-    enc = assign_to_centroids_grouped(
-        corpus_long,
-        cents,
-        group_col="subspace",
-        id_col=id_col,
-        vec_col="_v",
-        # m subspaces × k codes × (dim/m) values = k·dim, known
-        # plan-side — zero-job budget probe
-        known_total_vals=k * dim,
-    )
-    codes = enc.groupBy(id_col).agg(
-        *[
-            F.max(F.when(F.col("subspace") == s, F.col("_cid")))
-            .cast("int")
-            .alias(f"code_{s}")
-            for s in range(m)
-        ]
-    )
+    codes = encoded.select(id_col, *[f"code_{s}" for s in range(m)])
     codebooks = cents.select(
         "subspace", F.col("_cid").alias("code"), "centroid"
     )
@@ -141,11 +148,10 @@ def ivf_pq_fit_encode(
     vec_col: str = "embedding",
     part_col: str = "cid",
     round_dp: int = 6,
-    fit_sample_rows: int = 100_000,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Fused IVF+PQ fit-and-encode: the coarse quantizer and all m
     subspace codebooks learn in ONE grouped Lloyd pass, and the full
-    corpus is encoded in ONE projection.
+    corpus is encoded in ONE ``encode_nearest`` call.
 
     Group -1 carries the full-width coarse geometry (n_lists
     centroids); groups 0..m-1 the PQ subspaces (k codes each) — per
@@ -166,52 +172,8 @@ def ivf_pq_fit_encode(
     coarse_cents = (part_col, centroid); codebooks =
     (subspace, code, centroid).
     """
-    from resume_jd_matcher_spark.operators.ann import (
-        _LIT_ASSIGN_MAX_VALUES,
-        _argmin_literal,
-        lloyd_kmeans_grouped,
-    )
-
-    first = corpus.select(vec_col).first()
-    dim = len(first[0]) if first is not None and first[0] is not None else 0
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    sub = dim // m
-
-    def long_form(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col),
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(-1).alias("subspace"),
-                        F.col(vec_col).alias("_sv"),
-                    ),
-                    *[
-                        F.struct(
-                            F.lit(s).alias("subspace"),
-                            F.slice(vec_col, s * sub + 1, sub).alias("_sv"),
-                        )
-                        for s in range(m)
-                    ],
-                )
-            ).alias("_e"),
-        ).select(
-            F.col(id_col),
-            F.col("_e.subspace").alias("subspace"),
-            F.col("_e._sv").alias("_sv"),
-        )
-
-    fit = corpus.select(id_col, vec_col).orderBy(id_col).limit(fit_sample_rows)
-    cents = lloyd_kmeans_grouped(
-        long_form(fit),
-        n_clusters=k,
-        n_iter=n_iter,
-        group_col="subspace",
-        id_col=id_col,
-        vec_col="_sv",
-        round_dp=round_dp,
-        n_clusters_by_group={-1: n_lists},
+    encoded, cents = _fit_encode(
+        corpus, m, k, n_iter, id_col, vec_col, round_dp, (part_col, n_lists)
     )
     coarse_cents = cents.filter(F.col("subspace") == -1).select(
         F.col("_cid").alias(part_col), "centroid"
@@ -219,66 +181,7 @@ def ivf_pq_fit_encode(
     codebooks = cents.filter(F.col("subspace") >= 0).select(
         "subspace", F.col("_cid").alias("code"), "centroid"
     )
-    total_vals = n_lists * dim + m * k * sub
-    if 0 < total_vals <= _LIT_ASSIGN_MAX_VALUES:
-        # cents is checkpointed — the collect reads the materialized
-        # table, bounded at (n_lists + m*k) rows
-        by_group: dict = {}
-        for r in cents.collect():
-            by_group.setdefault(r["subspace"], []).append(
-                (r["_cid"], list(r["centroid"]))
-            )
-        by_group = {g: sorted(cl) for g, cl in by_group.items()}
-        dbl = f"transform(`{vec_col}`, x -> double(x))"
-        encoded = corpus.select(
-            "*",
-            _argmin_literal(dbl, by_group[-1]).alias(part_col),
-            *[
-                _argmin_literal(
-                    f"slice({dbl}, {s * sub + 1}, {sub})", by_group[s]
-                )
-                .cast("int")
-                .alias(f"code_{s}")
-                for s in range(m)
-            ],
-        )
-        return encoded, coarse_cents, codebooks
-    # at-scale route: broadcast-join encode over the long form, then
-    # one pivot back to the wide code row
-    from resume_jd_matcher_spark.operators.ann import (
-        assign_to_centroids_grouped,
-    )
-
-    corpus_long = long_form(corpus).select(
-        "subspace",
-        F.col(id_col),
-        F.transform("_sv", lambda x: x.cast("double")).alias("_v"),
-    )
-    enc = assign_to_centroids_grouped(
-        corpus_long,
-        cents,
-        group_col="subspace",
-        id_col=id_col,
-        vec_col="_v",
-        # total_vals is already known to exceed the literal budget on
-        # this branch — skip the collectable probe entirely so the
-        # centroid table is never materialized driver-side (r12
-        # ADVICE: the default probe collected e.g. 65536×768 coarse
-        # centroids before the budget check)
-        collectable=False,
-    )
-    wide = enc.groupBy(id_col).agg(
-        F.max(F.when(F.col("subspace") == -1, F.col("_cid")))
-        .cast("int")
-        .alias(part_col),
-        *[
-            F.max(F.when(F.col("subspace") == s, F.col("_cid")))
-            .cast("int")
-            .alias(f"code_{s}")
-            for s in range(m)
-        ],
-    )
-    return corpus.join(wide, id_col), coarse_cents, codebooks
+    return encoded, coarse_cents, codebooks
 
 
 def pq_adc_topk(

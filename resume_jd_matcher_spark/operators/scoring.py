@@ -28,18 +28,6 @@ def _stub_tokens(s: str) -> set[str]:
     return set(s.lower().split())
 
 
-def stub_score_response(sections_and_jd: tuple[list[tuple[str, str]], str]) -> str:
-    """Deterministic SCORES: response — per section, score = clamped
-    count of distinct section tokens also present in the JD."""
-    sections, jd = sections_and_jd
-    jd_toks = _stub_tokens(jd)
-    lines = ["SCORES:"]
-    for name, body in sections:
-        score = min(10, len(_stub_tokens(body) & jd_toks))
-        lines.append(f"{name}: {score}")
-    return "\n".join(lines)
-
-
 def _parse_prompt_sections(prompt: str) -> tuple[list[tuple[str, str]], str]:
     """Recover ([(section, body)...], jd_text) from an assembled
     SCORE_ALL_SECTIONS_PROMPT — the stub 'reads' the prompt exactly as
@@ -80,19 +68,6 @@ def _stub_backend(task: str) -> Callable[[pd.DataFrame], pd.Series]:
                 return "\n".join(lines)
 
             return pdf.apply(sp, axis=1)
-        if task == "score":
-            # SCORES: contract (constants.py:95-100); one line per section.
-            def sc(row):
-                jd_toks = _stub_tokens(row["jd_text"])
-                lines = ["SCORES:"]
-                for s in row["sections"]:
-                    name, body = s["section"], s["body"]
-                    lines.append(
-                        f"{name}: {min(10, len(_stub_tokens(body) & jd_toks))}"
-                    )
-                return "\n".join(lines)
-
-            return pdf.apply(sc, axis=1)
         if task == "feedback":
             # "- " bullets naming JD tokens missing from the resume
             # (contract of RESUME_FEEDBACK_QUERY, constants.py:7-30).

@@ -692,7 +692,9 @@ def q_mad_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT r.r_name AS region,
        n.n_name AS nation,
        count(DISTINCT o.o_orderkey)::BIGINT AS n_orders,
-       round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+       ((sum(round(l.l_extendedprice * 100)::BIGINT
+             * round((1 - l.l_discount) * 100)::BIGINT)::BIGINT + 50)
+        // 100) / 100.0::DOUBLE AS revenue
 FROM region r
 JOIN nation n ON n.n_regionkey = r.r_regionkey
 JOIN customer c ON c.c_nationkey = n.n_nationkey
@@ -710,7 +712,14 @@ def q_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the date filter PUSHED to the orders scan and the returnflag
     filter pushed to lineitem (Catalyst reorders and prunes; nothing
     hand-scheduled). The plan the optimizer picks here — selective
-    scans first, dims broadcast — is exactly the 100 TB plan."""
+    scans first, dims broadcast — is exactly the 100 TB plan.
+
+    Revenue is bit-identical by exactness: each line is an exact
+    BIGINT of ten-thousandths (price cents × discounted-percent), the
+    sum is order-free, and the half-up rounding to cents is integer
+    arithmetic before the one division by 100.0 — a double sum would
+    round a total lying exactly on half a cent either way depending
+    on the engine's addition order."""
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
     c = load_table(spark, sf_dir, "customer")
@@ -728,8 +737,10 @@ def q_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
             F.countDistinct("o_orderkey").alias("n_orders"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))), 2
+            F.expr(
+                "((sum(bigint(round(l_extendedprice * 100))"
+                " * bigint(round((1 - l_discount) * 100))) + 50) div 100)"
+                " / 100.0D"
             ).alias("revenue"),
         )
     )

@@ -571,9 +571,8 @@ def q_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-ranks only inside those clusters. Per-iteration centroid
     rounding makes the learned quantizer itself oracle-checkable — the
     DuckDB twin replays the identical Lloyd trajectory as unrolled
-    CTEs (flipped from rows-only in r03). The MLlib KMeans|| variant
-    of the same shape keeps its recall-floor pytest
-    (tests/test_vector.py)."""
+    CTEs (flipped from rows-only in r03). The same Lloyd routing keeps
+    a recall floor against brute force in tests/test_vector.py."""
     from resume_jd_matcher_spark.operators.ann import (
         ivf_topk,
         lloyd_kmeans_partition,

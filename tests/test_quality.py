@@ -91,41 +91,41 @@ def test_pq_determinism_and_recall(spark):
     assert self_hits >= 6  # of 10; quantization can merge close pairs
 
 
-def test_pq_fit_is_sample_bounded(spark):
-    """The codebook fit must scan only the fit_sample_rows lowest-id
+def test_pq_fit_is_sample_bounded(spark, monkeypatch):
+    """The codebook fit must scan only the FIT_SAMPLE_ROWS lowest-id
     vectors: fitting the full corpus with a cap of 20 yields the exact
     codebooks of fitting the 20-row prefix uncapped — and the ENCODE
     still covers every corpus row."""
-    from resume_jd_matcher_spark.operators.pq import pq_fit_encode
+    from resume_jd_matcher_spark.operators import pq
     from resume_jd_matcher_spark.sources.io import load_table
 
     emb = load_table(spark, SF, "embeddings")
     n = emb.count()
     assert n > 20  # the cap must actually bite
-    codes_capped, books_capped = pq_fit_encode(
-        emb, m=4, k=4, n_iter=2, fit_sample_rows=20
-    )
     prefix = emb.orderBy("vec_id").limit(20)
-    _, books_prefix = pq_fit_encode(prefix, m=4, k=4, n_iter=2)
+    _, books_prefix = pq.pq_fit_encode(prefix, m=4, k=4, n_iter=2)
+    monkeypatch.setattr(pq, "FIT_SAMPLE_ROWS", 20)
+    codes_capped, books_capped = pq.pq_fit_encode(emb, m=4, k=4, n_iter=2)
     assert sorted(map(tuple, books_capped.collect())) == sorted(
         map(tuple, books_prefix.collect())
     )
     assert codes_capped.count() == n  # full corpus encoded
 
 
-def test_pq_capped_fit_matches_full_fit_when_cap_covers_corpus(spark):
-    """With the cap above the corpus size (the default at test scale),
-    the prefix sample IS the corpus — codebooks and codes must be
-    bit-identical to an uncapped fit, which is why the pq_topk oracle
-    needs no sample clause."""
-    from resume_jd_matcher_spark.operators.pq import pq_fit_encode
+def test_pq_capped_fit_matches_full_fit_when_cap_covers_corpus(
+    spark, monkeypatch
+):
+    """With the cap at the corpus size (the default is above it at
+    test scale), the prefix sample IS the corpus — codebooks and codes
+    must be bit-identical to the default fit, which is why the pq_topk
+    oracle needs no sample clause."""
+    from resume_jd_matcher_spark.operators import pq
     from resume_jd_matcher_spark.sources.io import load_table
 
     emb = load_table(spark, SF, "embeddings")
-    codes_a, books_a = pq_fit_encode(emb, m=4, k=4, n_iter=2)
-    codes_b, books_b = pq_fit_encode(
-        emb, m=4, k=4, n_iter=2, fit_sample_rows=10**9
-    )
+    codes_a, books_a = pq.pq_fit_encode(emb, m=4, k=4, n_iter=2)
+    monkeypatch.setattr(pq, "FIT_SAMPLE_ROWS", emb.count())
+    codes_b, books_b = pq.pq_fit_encode(emb, m=4, k=4, n_iter=2)
     assert sorted(map(tuple, books_a.collect())) == sorted(
         map(tuple, books_b.collect())
     )

@@ -204,7 +204,7 @@ class TestBPE:
         assert len(merges) >= 5  # the loop genuinely iterated
         assert live["peak"] <= 2, f"peak cached vocab generations {live['peak']}"
         assert live["n"] == 0, "a vocab generation leaked past the loop"
-        # allow the (ContextCleaner-collectable) localCheckpoint RDD
-        # taken at step 8 to linger; nothing else may remain
+        # allow the localCheckpoint RDD taken at step 8 (ContextCleaner
+        # reclaims it later) to linger; nothing else may remain
         after = spark.sparkContext._jsc.getPersistentRDDs().size()
         assert after <= baseline + 1

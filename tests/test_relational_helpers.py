@@ -186,3 +186,42 @@ def test_gap_fill_interpolate_linear_blend(spark):
     assert out[base + 2]["interp_value"] == 6.0
     assert out[base + 3]["interp_value"] == 4.0
     assert out[base + 4]["interp_value"] == 2.0
+
+
+def test_star_join_revenue_rounds_half_cent_tie_up(spark, tmp_path):
+    """Two lines whose exact discounted revenue is 56567.285 — a total
+    lying on half a cent, which a double sum renders 56567.284999…
+    and rounds down. The engine must return the exact half-up cents."""
+    import datetime
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from resume_jd_matcher_spark.queries.relational_q import (
+        q_star_join_revenue,
+    )
+
+    lines = [(26346.58, 0.05), (33551.10, 0.06)]
+    day = datetime.datetime(1996, 6, 1)
+    tables = {
+        "region": {"r_regionkey": [0], "r_name": ["R0"]},
+        "nation": {"n_nationkey": [0], "n_name": ["N0"], "n_regionkey": [0]},
+        "customer": {"c_custkey": [1], "c_nationkey": [0]},
+        "orders": {"o_orderkey": [1, 2], "o_custkey": [1, 1], "o_orderdate": [day, day]},
+        "lineitem": {
+            "l_orderkey": [1, 2],
+            "l_extendedprice": [p for p, _ in lines],
+            "l_discount": [d for _, d in lines],
+            "l_returnflag": ["R", "R"],
+        },
+    }
+    for name, cols in tables.items():
+        pq.write_table(pa.table(cols), str(tmp_path / f"{name}.parquet"))
+
+    exact = sum(Decimal(str(p)) * (1 - Decimal(str(d))) for p, d in lines)
+    assert exact == Decimal("56567.285")  # the fixture really is a tie
+    want = float(exact.quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
+    [row] = q_star_join_revenue(spark, str(tmp_path)).collect()
+    assert (row["nation"], row["n_orders"]) == ("N0", 2)
+    assert row["revenue"] == want == 56567.29

@@ -210,11 +210,14 @@ def test_blas_probe_ceiling_raises(spark):
 
 
 def test_kmeans_ivf_recall_floor(spark):
-    """Learned-quantizer IVF vs brute force: the KMeans routing must
-    clear the same recall floor as the label-routed path."""
+    """Learned-quantizer IVF vs brute force: the Lloyd k-means routing
+    must clear the same recall floor as the label-routed path."""
     from pyspark.sql import functions as F
 
-    from resume_jd_matcher_spark.operators.ann import ivf_topk, kmeans_partition
+    from resume_jd_matcher_spark.operators.ann import (
+        ivf_topk,
+        lloyd_kmeans_partition,
+    )
     from resume_jd_matcher_spark.operators.similarity_blas import (
         topk_similarity_blas,
     )
@@ -231,8 +234,8 @@ def test_kmeans_ivf_recall_floor(spark):
             emb.select("vec_id", "embedding"), q, k=5
         ).collect()
     }
-    parted = kmeans_partition(emb, n_clusters=8).select(
-        "vec_id", "embedding", "_kpart"
+    parted, _ = lloyd_kmeans_partition(
+        emb.select("vec_id", "embedding"), n_clusters=8
     )
     got = {
         (r.query_id, r.vec_id)
@@ -301,19 +304,23 @@ def test_grouped_literals_never_collects_over_budget(spark, monkeypatch):
 
 
 def test_ivf_pq_at_scale_branch_skips_literal_probe(spark, monkeypatch):
-    """r12 ADVICE: ivf_pq_fit_encode's at-scale branch already knows
-    total_vals exceeds the budget — it must pass collectable=False so
-    the grouped assign never probes the literal route at all."""
+    """r12 ADVICE: ivf_pq_fit_encode knows its centroid value count
+    plan-side, so over the literal budget the encode takes the
+    broadcast-join route without collecting a single centroid row to
+    the driver. Poison collect on any centroid-bearing DataFrame."""
+    from pyspark.sql import DataFrame
+
     from resume_jd_matcher_spark.operators import ann, pq
 
     monkeypatch.setattr(ann, "_LIT_ASSIGN_MAX_VALUES", 1)
-    monkeypatch.setattr(
-        ann,
-        "_grouped_literals",
-        lambda *a, **k: (_ for _ in ()).throw(
-            AssertionError("literal probe on the at-scale branch")
-        ),
-    )
+    real_collect = DataFrame.collect
+
+    def collect(self):
+        if "centroid" in self.columns:
+            raise AssertionError("centroid rows collected on the at-scale branch")
+        return real_collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", collect)
     corpus = spark.createDataFrame(
         [(i, [float(i % 3), 1.0, float(i % 2), 0.0]) for i in range(12)],
         "vec_id long, embedding array<double>",
@@ -323,3 +330,38 @@ def test_ivf_pq_at_scale_branch_skips_literal_probe(spark, monkeypatch):
     )
     assert encoded.count() == 12
     assert {c for c in encoded.columns} >= {"cid", "code_0", "code_1"}
+
+
+def test_join_route_encodes_like_literal_route(spark, monkeypatch):
+    """encode_nearest's two routes must agree: with the literal budget
+    at 0 every quantizer encodes through the broadcast-join argmin,
+    and assignments, codes and centroids equal the default (literal)
+    route's exactly."""
+    from resume_jd_matcher_spark.operators import ann, pq
+
+    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
+
+    def run():
+        parted, cents = ann.lloyd_kmeans_partition(
+            emb, n_clusters=4, n_iter=2, out_col="cid"
+        )
+        codes, books = pq.pq_fit_encode(emb, m=4, k=4, n_iter=2)
+        encoded, coarse, books2 = pq.ivf_pq_fit_encode(
+            emb, n_lists=4, m=4, k=4, n_iter=2
+        )
+        frames = (
+            parted.drop("embedding"),
+            cents,
+            codes,
+            books,
+            encoded.drop("embedding"),
+            coarse,
+            books2,
+        )
+        return [sorted(map(tuple, f.collect())) for f in frames]
+
+    literal = run()
+    monkeypatch.setattr(ann, "_LIT_ASSIGN_MAX_VALUES", 0)
+    joined = run()
+    assert literal[0]  # non-vacuous: rows were compared
+    assert literal == joined
